@@ -637,3 +637,40 @@ def test_batch_size_width_guard():
     CrawlConfig(batch_size=1_000_000)  # boundary is inclusive
     with _pytest.raises(ValueError, match="superstep"):
         CrawlConfig(batch_size=1_000_001)
+
+
+class TestSuperstepJobBudget:
+    """Each stage of a superstep runs once: the claimed batch, the planned
+    misses and the extracted links are pinned where their consumers fork.
+    A change that re-forks a stage (a second action re-running it) shows
+    up as more Spark jobs for the same superstep."""
+
+    # measured on this fixture when the pins were placed (local[4]; the
+    # unpinned superstep ran 55)
+    MAX_JOBS = 42
+
+    def test_checkpointed_superstep_job_count(self, spark, tmp_path):
+        from webscraping_spark.operators.robots import ROBOTS_SCHEMA
+
+        pages = synth.site_dirty_links()
+        robots_df = spark.createDataFrame(
+            [("dirty.com", "*", "disallow", "/dir/q.html", 0, 0)], ROBOTS_SCHEMA
+        )
+        job = CrawlJob(
+            spark,
+            synth.pages_df(spark, pages),
+            CrawlConfig(max_depth=None),
+            robots=robots_df,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+        sc = spark.sparkContext
+        group = "superstep-job-budget"
+        sc.setJobGroup(group, "one checkpointed crawl superstep")
+        try:
+            job.run([pages[0]["url"]], max_supersteps=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert job.last_batch_visits == [pages[0]["url"]]
+        assert 0 < n_jobs <= self.MAX_JOBS

@@ -325,6 +325,23 @@ class TestTemperatureMix:
         with pytest.raises(ValueError):
             sampling.domain_mix(skewed, "dom", {"a": 1.5}, "id")
 
+    @pytest.mark.parametrize("bad", [-0.25, 1.5])
+    def test_rates_df_out_of_range_raises(self, spark, skewed, bad):
+        """The DataFrame-rates form rejects a rate outside [0,1] with the
+        dict form's message (on the action: the rates stay distributed)
+        instead of clamping it to keep-none or keep-all."""
+        with pytest.raises(ValueError, match=r"rates out of \[0,1\]"):
+            sampling.domain_mix(skewed, "dom", {"b": bad}, "id")
+        rates = spark.createDataFrame(
+            [("a", 0.5), ("b", bad)], "dom string, rate double"
+        )
+        with pytest.raises(Exception, match=r"rates out of \[0,1\]: \{'b': "):
+            sampling.domain_mix(skewed, "dom", rates, "id").collect()
+        # in-range edges pass
+        ok = spark.createDataFrame([("a", 0.0), ("b", 1.0)], "dom string, rate double")
+        kept = sampling.domain_mix(skewed, "dom", ok, "id")
+        assert kept.count() == 400
+
     def test_rates_df_matches_dict_form(self, spark, skewed):
         """temperature_rates_df (round-6, the 10^8-domain no-collect
         shape) must reproduce the dict form's rates exactly and produce

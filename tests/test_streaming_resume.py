@@ -284,6 +284,38 @@ class TestBucketedStateProbes:
         assert v_big <= v_small + 6
         assert v_big < 10  # absolute bound << 24
 
+    def test_compacting_crawl_matches_oracle(self, spark, tmp_path):
+        """Supersteps after a compaction probe the bucket-pruned seen base
+        with the pinned link set; a branching crawl across compactions
+        keeps the sequential crawler's visit order and seen membership."""
+        from pyspark.sql import functions as F
+
+        pages = synth.site_tree(branching=2, depth=2)
+        seeds = [pages[0]["url"]]
+        expected = SequentialOracle(
+            {p["url"]: p for p in pages}, OracleConfig(max_depth=None)
+        ).run(seeds)
+        ckpt = str(tmp_path / "ckpt_compacting")
+        job = CrawlJob(
+            spark,
+            synth.pages_df(spark, pages),
+            CrawlConfig(
+                max_depth=None, batch_size=2, checkpoint_interval=2,
+                state_buckets=8,
+            ),
+            checkpoint_dir=ckpt,
+        )
+        job.run(seeds)
+        assert job.metrics.supersteps >= 3  # a compaction, then a delta
+        assert job.visit_urls() == expected.visit_order
+        seen = SnapshotCatalog(ckpt).table("seen").load(spark)
+        want = spark.createDataFrame(
+            [(u,) for u in expected.found], "url string"
+        ).select(F.xxhash64("url"))
+        assert sorted(r[0] for r in seen.select("url_hash").collect()) == sorted(
+            r[0] for r in want.collect()
+        )
+
     def test_resume_restores_bucketed_base(self, spark, tmp_path):
         """Kill mid-crawl after a compaction, restore: the bucketed base
         must come back as the on-disk probe base (not re-materialized into

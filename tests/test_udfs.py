@@ -52,6 +52,73 @@ def test_get_domain_col_parity(spark):
         assert r["py"] == expected, f"UDF domain mismatch for {r['url']}"
 
 
+def test_get_domain_fuzz_parity(spark):
+    """Seeded host soup: get_domain_col == get_domain_udf == get_domain.
+    The JVM form answers most hosts with one trie-regex pass and routes
+    hosts with empty labels to an exact label walk; both must agree with
+    the kernel on empty labels (leading, trailing and doubled dots),
+    all-suffix hosts, labels that merely start or end with a suffix
+    ('comfoo', 'fooco'), suffix labels in mid-host, ports, mixed case and
+    IP hosts."""
+    import random
+
+    from webscraping_spark.functions.urlnorm import _DOMAIN_SUFFIXES
+
+    rng = random.Random(20261017)
+    suffixes = sorted(_DOMAIN_SUFFIXES)
+    plain = ["example", "www", "a", "x1", "comfoo", "fooco", "coms", "c",
+             "o", "cou", "ukk", "org-", "co-op", "xn--p1ai", "shop3",
+             "d123", "", ""]
+    schemes = ["http://", "https://", "", "ftp://", "HTTP://"]
+    tails = ["", "/", "/p.html", "/a/b?q=1", ":8080/x", "?r=http://x.co.uk/",
+             "/go?to=https://10.0.0.1/"]
+    ips = ["10.0.0.1", "192.168.1.254", "1.2.3.4.5", "999.1.1.1", "1.2.3",
+           "127.0.0.1"]
+
+    def label():
+        r = rng.random()
+        if r < 0.45:
+            return rng.choice(suffixes)
+        if r < 0.9:
+            return rng.choice(plain)
+        return rng.choice(suffixes) + rng.choice(["foo", "1", "-x", ""])
+
+    urls = []
+    for _ in range(1500):
+        if rng.random() < 0.08:
+            host = rng.choice(ips)
+            if rng.random() < 0.3:
+                host = rng.choice(["www.", "a.b."]) + host
+        else:
+            host = ".".join(label() for _ in range(rng.randint(1, 5)))
+            if rng.random() < 0.15:
+                host = "." + host
+            if rng.random() < 0.15:
+                host += "."
+            if rng.random() < 0.2:
+                host = "".join(ch.upper() if rng.random() < 0.5 else ch for ch in host)
+        urls.append(rng.choice(schemes) + host + rng.choice(tails))
+    # the shapes the docstring names, whatever the draw produced
+    urls += [
+        "http://.example.com/", "http://example.com./", "http://a..b.com/",
+        "http://..com/", "http://co.uk/", "http://com.au.co/", "http://com/",
+        "http://comfoo.com/", "http://www.co.example.com/",
+        "http://shop.com.au.example.net/", "http://10.1.2.3:81/x",
+        "http://user.10.1.2.3/", "",
+    ]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    rows = df.select(
+        "url",
+        udfs.get_domain_col(F.col("url")).alias("jvm"),
+        udfs.get_domain_udf(F.col("url")).alias("py"),
+    ).collect()
+    assert len(rows) == len(urls)
+    for r in rows:
+        expected = get_domain(r["url"])
+        assert r["jvm"] == expected, f"JVM domain mismatch for {r['url']!r}: {r['jvm']!r}"
+        assert r["py"] == expected, f"UDF domain mismatch for {r['url']!r}: {r['py']!r}"
+
+
 def test_canonicalize_split_parity(spark):
     df = spark.createDataFrame(LINK_CASES, "base string, link string")
     out = udfs.canonicalize_split(df, "base", "link", "canon").collect()

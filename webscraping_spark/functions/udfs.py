@@ -122,7 +122,8 @@ def get_domain_col(url: Column) -> Column:
     # Equivalence to the walk holds for every host with non-empty labels;
     # hosts with EMPTY labels (leading/trailing/doubled dots — '[^.]+'
     # cannot match an empty label) are routed to the exact label-walk
-    # below. Parity is property-tested against get_domain_udf.
+    # below. Parity with get_domain_udf and urlnorm.get_domain is
+    # fuzz-tested in tests/test_udfs.py::test_get_domain_fuzz_parity.
     tail_pat = rf"(?:^|\.)((?!(?:{suf})(?:\.|$))[^.]+(?:\.(?:{suf}))*)$"
     fast = F.regexp_extract(host, tail_pat, 1)
     irregular = (

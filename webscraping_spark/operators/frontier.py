@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webscraping_spark.operators.ordering import assign_global_seq
+from webscraping_spark.session import local_frame
 
 FRONTIER_SCHEMA = (
     "url string, url_hash long, domain string, depth int, priority int, "
@@ -64,7 +65,7 @@ class Frontier:
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "Frontier":
-        return cls(spark.createDataFrame([], FRONTIER_SCHEMA))
+        return cls(local_frame(spark, [], FRONTIER_SCHEMA))
 
     def push(self, candidates: DataFrame, dedup: bool = True) -> "Frontier":
         """Enqueue candidate URLs.

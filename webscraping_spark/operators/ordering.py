@@ -7,17 +7,22 @@ order deterministic under parallelism (SURVEY.md §7.3 item 1). A naive
 10^10-URL scale that is the whole job. Instead:
 
   1. range-repartition + sort within partitions on the order key
-     (total order across partition ids),
+     (total order across partition ids), pinned so every later read sees
+     the same partitions in the same row order,
   2. one cheap count-per-partition job -> cumulative offsets (tiny,
-     collected to the driver, broadcast),
-  3. mapInPandas stamps ``offset[pid] + local running index``.
+     collected to the driver),
+  3. a JVM projection stamps ``offset[pid] + local running index``: the
+     offsets ride in as a literal array indexed by ``spark_partition_id``,
+     and the local index is the low 33 bits of
+     ``monotonically_increasing_id`` (its high bits are the partition id).
 
-Cost: one extra count job over the batch; every stage is fully parallel.
+Cost: one extra count job over the batch; every stage is fully parallel and
+no row crosses into Python, so re-reading the stamped frame is a projection
+over pinned blocks.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -33,39 +38,30 @@ def assign_global_seq(
     ``order_cols`` (which must be deterministic and total — pass a unique
     tiebreaker). Returns (stamped_df, row_count) — the count is a free
     byproduct of the offset job."""
-    spark = df.sparkSession
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    # the stamp below reads partition ids and in-partition positions, so it
+    # must see exactly the partitions the counts came from: pin them
     arranged = (
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
-    arranged = arranged.localCheckpoint(eager=False)
-    counts = {
-        r["_pid"]: r["n"]
-        for r in arranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets = {}
+    counts = dict(
+        arranged.groupBy(F.spark_partition_id().alias("_pid"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    )
+    offsets = []
     acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    b_offsets = spark.sparkContext.broadcast(offsets)
-    out_schema = arranged.drop("_pid").schema.add(seq_col, "long")
-
-    def stamp(batches):
-        consumed = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["_pid"].iloc[0])
-            base = b_offsets.value[pid] + consumed
-            consumed += len(pdf)
-            out = pdf.drop(columns=["_pid"])
-            out[seq_col] = base + np.arange(len(pdf), dtype=np.int64)
-            yield out
-
-    return arranged.mapInPandas(stamp, out_schema), acc - start
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    base = F.element_at(
+        F.array(*[F.lit(o) for o in offsets]).cast("array<bigint>"),
+        F.spark_partition_id() + 1,
+    )
+    local = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+    return arranged.withColumn(seq_col, base + local), acc - start
 
 
 def _spread_bits(x):

@@ -50,6 +50,56 @@ def jitter_col(delay, variance: float, seed: int) -> "F.Column":
     return d * (F.lit(1.0) + F.lit(variance) * (u - F.lit(0.5)))
 
 
+def _with_delay_floor(
+    df: DataFrame, delay: float, domain_delays: DataFrame | None
+) -> tuple[DataFrame, "float | Column"]:
+    """(df, effective delay): the configured delay, or with robots
+    Crawl-delay overrides — a (domain, crawl_delay) table
+    (robots.crawl_delay_table) broadcast in — the per-domain maximum of
+    the two. The configured delay is the politeness FLOOR: robots can slow
+    a domain down, never below the crawler's own minimum spacing."""
+    if domain_delays is None:
+        return df, float(delay)
+    df = df.join(F.broadcast(domain_delays), "domain", "left")
+    eff = F.greatest(
+        F.lit(float(delay)), F.coalesce(F.col("crawl_delay"), F.lit(0.0))
+    )
+    return df, eff
+
+
+def roll_domain_state(
+    planned: DataFrame,
+    domain_state: DataFrame,
+    delay: float = 5.0,
+    variance: float = 0.5,
+    seed: int = 42,
+    proxy_col: str | None = None,
+    domain_delays: DataFrame | None = None,
+) -> DataFrame:
+    """``domain_state`` rolled forward past a planned batch (the output of
+    :func:`plan_schedule` with the same parameters): each (domain, proxy)
+    group's next allowed offset is its last fetch's scheduled offset plus
+    that fetch's jittered delay; groups the batch did not touch carry over.
+    Jitter is a pure function of the row, so it is recomputed here rather
+    than carried through the plan — which lets a caller pin the planned
+    batch first and roll the state from the pinned rows."""
+    b, eff_delay = _with_delay_floor(
+        planned,
+        delay,
+        None if domain_delays is None else domain_delays.select("domain", "crawl_delay"),
+    )
+    proxy = F.col(proxy_col) if proxy_col else F.lit("")
+    new_state = b.groupBy("domain", proxy.alias("proxy")).agg(
+        F.max(
+            F.col("scheduled_offset") + jitter_col(eff_delay, variance, seed)
+        ).alias("next_allowed_offset")
+    )
+    carried = domain_state.join(
+        new_state.select("domain", "proxy"), ["domain", "proxy"], "left_anti"
+    )
+    return new_state.unionByName(carried)
+
+
 def plan_schedule(
     batch: DataFrame,
     domain_state: DataFrame,
@@ -63,7 +113,8 @@ def plan_schedule(
     """Assign ``scheduled_offset`` (seconds from superstep start) to each
     row of the batch and roll ``domain_state`` forward.
 
-    Returns (planned_batch, new_domain_state).
+    Returns (planned_batch, new_domain_state); the state is
+    :func:`roll_domain_state` over the planned batch.
 
     Within a domain, row i's offset = carry_in + sum(jitter of rows < i):
     the first fetch of a domain in a batch may start immediately (offset =
@@ -92,18 +143,9 @@ def plan_schedule(
     and tested against the unbucketed scan with np.isclose.
     """
     proxy = F.col(proxy_col) if proxy_col else F.lit("")
-    b = batch.withColumn("_proxy", proxy)
-
-    eff_delay = float(delay)
-    if domain_delays is not None:
-        # robots Crawl-delay overrides: a (domain, crawl_delay) table
-        # (robots.crawl_delay_table) broadcasts in; the configured delay
-        # is the politeness FLOOR — robots can slow a domain down, never
-        # below the crawler's own minimum spacing
-        b = b.join(F.broadcast(domain_delays), "domain", "left")
-        eff_delay = F.greatest(
-            F.lit(float(delay)), F.coalesce(F.col("crawl_delay"), F.lit(0.0))
-        )
+    b, eff_delay = _with_delay_floor(
+        batch.withColumn("_proxy", proxy), delay, domain_delays
+    )
 
     hot_bases = None
     if hot_group_rows is not None:
@@ -259,23 +301,17 @@ def plan_schedule(
         )
         .drop("next_allowed_offset")
     )
-    new_state = (
-        planned.groupBy("domain", "_proxy")
-        .agg(
-            F.max(F.col("scheduled_offset") + F.col("_jitter")).alias(
-                "next_allowed_offset"
-            )
-        )
-        .withColumnRenamed("_proxy", "proxy")
+    planned = planned.drop(
+        "_proxy", "_jitter", "_prior_delay", "_bucket", "crawl_delay"
     )
-    carried = domain_state.join(
-        new_state.select("domain", F.col("proxy").alias("proxy")),
-        ["domain", "proxy"],
-        "left_anti",
-    )
-    return (
-        planned.drop("_proxy", "_jitter", "_prior_delay", "_bucket", "crawl_delay"),
-        new_state.unionByName(carried),
+    return planned, roll_domain_state(
+        planned,
+        domain_state,
+        delay=delay,
+        variance=variance,
+        seed=seed,
+        proxy_col=proxy_col,
+        domain_delays=domain_delays,
     )
 
 

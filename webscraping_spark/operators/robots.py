@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webscraping_spark.session import local_frame
+
 ROBOTS_SCHEMA = (
     "domain string, agent string, rule string, path_prefix string, "
     "order int, entry int"
@@ -206,7 +208,7 @@ def sitemap_table(spark, per_domain_texts: dict[str, str]):
         for domain, text in per_domain_texts.items()
         for pos, sm in enumerate(parse_sitemaps(text))
     ]
-    return spark.createDataFrame(rows, SITEMAPS_SCHEMA)
+    return local_frame(spark, rows, SITEMAPS_SCHEMA)
 
 
 def robots_table(spark, per_domain_texts: dict[str, str]):
@@ -215,7 +217,7 @@ def robots_table(spark, per_domain_texts: dict[str, str]):
         row for domain, text in per_domain_texts.items()
         for row in parse_robots_txt(domain, text)
     ]
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return local_frame(spark, rows, ROBOTS_SCHEMA)
 
 
 def delays_table(spark, per_domain_texts: dict[str, str]):
@@ -224,7 +226,7 @@ def delays_table(spark, per_domain_texts: dict[str, str]):
         row for domain, text in per_domain_texts.items()
         for row in parse_robots_delays(domain, text)
     ]
-    return spark.createDataFrame(rows, DELAYS_SCHEMA)
+    return local_frame(spark, rows, DELAYS_SCHEMA)
 
 
 _DIRECTIVE_COLS = ["crawl_delay", "rate_requests", "rate_seconds"]

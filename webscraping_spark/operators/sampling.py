@@ -218,10 +218,11 @@ def pack_examples(
 
     100-TB plan shape (the naive version is a single-task window):
       1. SKINNY offset pass: (id, n_tokens) rows — 16 bytes/doc — get a
-         global exclusive prefix sum via the same two-level scheme as
+         global exclusive prefix sum via the two-level scheme of
          ordering.assign_global_seq (range-partition on id, per-partition
-         totals collected and broadcast, numpy cumsum stamps inside each
-         partition). The corpus TEXT never rides this Arrow hop.
+         totals collected and broadcast); here a numpy cumsum stamps
+         inside each partition, since the per-row increment is n_tokens,
+         not 1. The corpus TEXT never rides this Arrow hop.
       2. Offsets join back to the docs on the id (co-partitions with
          id-keyed upstream stages); each doc emits its per-example
          FRAGMENTS with JVM higher-order expressions — a doc spanning
@@ -438,9 +439,28 @@ def domain_mix(
     engine)."""
     spark = df.sparkSession
     if isinstance(rates, DataFrame):
+        # the dict path's range check, row by row: a rate outside [0,1]
+        # (or NULL/NaN) fails the action instead of clamping to keep-all
+        # or keep-none
+        rate = F.col("rate")
         rates_df = rates.select(
             F.col(domain_col),
-            F.round(F.col("rate") * F.lit(float(_BUCKETS))).cast("long").alias("_thr"),
+            F.when(
+                (rate >= 0.0) & (rate <= 1.0),
+                F.round(rate * F.lit(float(_BUCKETS))).cast("long"),
+            )
+            .otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit("rates out of [0,1]: {'"),
+                        F.coalesce(F.col(domain_col).cast("string"), F.lit("None")),
+                        F.lit("': "),
+                        F.coalesce(rate.cast("string"), F.lit("None")),
+                        F.lit("}"),
+                    )
+                )
+            )
+            .alias("_thr"),
         )
     else:
         bad = {d: r for d, r in rates.items() if not 0.0 <= r <= 1.0}

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webscraping_spark.session import local_frame
+
 SEEN_SCHEMA = "partition int, kind string, filter_bytes binary, n_items long"
 # the exact URL-seen row shape (shared with plans.crawl.SEEN_SCHEMA so the
 # empty-set constructor can never diverge from the delta writes)
@@ -190,7 +192,7 @@ class ExactSeenSet:
 
     @classmethod
     def empty(cls, spark) -> "ExactSeenSet":
-        return cls(spark.createDataFrame([], EXACT_SEEN_SCHEMA))
+        return cls(local_frame(spark, [], EXACT_SEEN_SCHEMA))
 
     def filter_unseen(self, candidates: DataFrame, on: str = "url_hash") -> DataFrame:
         """Left ANTI join: candidates not already seen.
@@ -236,7 +238,7 @@ class BloomSeenSet:
     @classmethod
     def empty(cls, spark, num_partitions: int = 32, expected_items_per_partition: int = 100_000, fp_rate: float = 1e-4):
         m, k = bloom_params(expected_items_per_partition, fp_rate)
-        state = spark.createDataFrame([], SEEN_SCHEMA)
+        state = local_frame(spark, [], SEEN_SCHEMA)
         return cls(state, num_partitions, m, k)
 
     def _with_partition(self, df: DataFrame, on: str) -> DataFrame:
@@ -522,7 +524,7 @@ class CuckooSeenSet:
 
     @classmethod
     def empty(cls, spark, num_partitions: int = 32, capacity_per_partition: int = 100_000):
-        return cls(spark.createDataFrame([], SEEN_SCHEMA), num_partitions, capacity_per_partition)
+        return cls(local_frame(spark, [], SEEN_SCHEMA), num_partitions, capacity_per_partition)
 
     def _apply(self, hashes_df: DataFrame, op: str, on: str) -> "CuckooSeenSet":
         capacity = self.capacity

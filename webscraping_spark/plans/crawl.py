@@ -24,11 +24,19 @@ cannot change under them) plus one interior row per superstep — exact
 parity at any batch_size. Unbounded DFS still requires batch_size=1 and
 CrawlConfig rejects anything else outright.
 
-Scale notes: every stage is a DataFrame op — the only Python is the
-canonicalize/domain pandas UDFs and the claim fixpoint's driver loop
-(bounded, usually 1 iteration). Frontier and seen state are checkpointed
-per superstep through the snapshot catalog, which is what `resume` reads
-back. Hot domains are salted at the fetch-stage repartition
+Scale notes: every stage is a DataFrame op. Python runs in two row
+kernels — the canonicalize pandas UDF over the dirty tail of extracted
+links, and over meta-refresh targets while the page store resolves — and
+on the driver in the claim fixpoint's loop (bounded, usually 1
+iteration). Registrable domains and ``seq`` stamping are JVM expressions,
+and driver-local rows reach the JVM as Arrow tables, not Python RDDs.
+Each stage several actions read runs once per superstep: the claimed
+batch is materialized, and the planned misses and the extracted links are
+pinned where their consumers fork. The page payload is not pinned, so the
+store join runs twice: once under the plan's narrow projection, once
+under extraction. Frontier and seen state are checkpointed per superstep
+through the snapshot catalog, which is what `resume` reads back. Hot
+domains are salted at the fetch-stage repartition
 (operators/politeness.salted_repartition); politeness itself is planned on
 the unsalted key.
 """
@@ -52,6 +60,7 @@ from webscraping_spark.operators.frontier import (
 )
 from webscraping_spark.operators.robots import robots_gate
 from webscraping_spark.operators.seen import BloomSeenSet, ExactSeenSet
+from webscraping_spark.session import local_frame
 from webscraping_spark.sources.snapshots import SnapshotCatalog
 
 # status deltas recorded per superstep (frontier_claims table)
@@ -253,7 +262,7 @@ class CrawlJob:
         # is derivable from frontier state, never held on the driver:
         # see visit_order_df()
         self.last_batch_visits: list[str] = []
-        self._domain_state = spark.createDataFrame([], politeness.DOMAIN_STATE_SCHEMA)
+        self._domain_state = local_frame(spark, [], politeness.DOMAIN_STATE_SCHEMA)
 
     # ------------------------------------------------------------------ store
 
@@ -439,12 +448,12 @@ class CrawlJob:
             )
         else:
             rows = [(u, i) for i, u in enumerate(seeds)]
-            df = self.spark.createDataFrame(
-                rows, "url string, discovery_order long"
+            df = local_frame(
+                self.spark, rows, "url string, discovery_order long"
             )
         return (
             df.withColumn("url_hash", F.xxhash64("url"))
-            .withColumn("domain", udfs.get_domain_udf(F.col("url")))
+            .withColumn("domain", udfs.get_domain_col(F.col("url")))
             .withColumn("depth", F.lit(0))
             .withColumn("priority", F.lit(0))
         )
@@ -475,7 +484,7 @@ class CrawlJob:
             # `status404` drive the reference's empty-cache semantics on
             # re-read (download.py:204-218): an empty/invalid entry with
             # retries left is re-downloaded, unless its status was 404
-            self._visited = self.spark.createDataFrame([], VISITED_SCHEMA)
+            self._visited = local_frame(self.spark, [], VISITED_SCHEMA)
             # 0 = provably empty (probe jobs skipped); None = maybe
             # non-empty (the count itself lives on the cluster)
             self._visited_count = 0
@@ -522,7 +531,7 @@ class CrawlJob:
             all_rows = batch.collect()
             if not all_rows:
                 break
-            batch = self.spark.createDataFrame(all_rows, batch.schema)
+            batch = local_frame(self.spark, all_rows, batch.schema)
             claim_counter = frontier.pull_counter
             rows = sorted(
                 (
@@ -553,8 +562,8 @@ class CrawlJob:
                 n_cache = len(rows)
                 # dl bypasses the cache entirely (no Download.get) — the
                 # visited table gets no rows, so the snapshot delta is empty
-                self._last_visited_delta = self.spark.createDataFrame(
-                    [], VISITED_SCHEMA
+                self._last_visited_delta = local_frame(
+                    self.spark, [], VISITED_SCHEMA
                 )
             else:
                 resolved, n_ok, n_err, n_cache = self._fetch_and_account(
@@ -600,7 +609,6 @@ class CrawlJob:
                 )
                 found = ExactSeenSet(found.df.localCheckpoint())
                 self._visited = self._visited.localCheckpoint()
-                self._domain_state = self._domain_state.localCheckpoint()
                 if bloom is not None:
                     bloom = BloomSeenSet(
                         bloom.state.localCheckpoint(), bloom.P, bloom.m, bloom.k
@@ -627,7 +635,7 @@ class CrawlJob:
                         metrics=self.metrics.as_dict(), mode="full",
                     )
                     self.catalog.table("frontier_claims").commit(
-                        self.spark.createDataFrame([], CLAIMS_SCHEMA),
+                        local_frame(self.spark, [], CLAIMS_SCHEMA),
                         superstep=step, mode="full",
                     )
                     # seen/visited full snapshots are hash-bucketed on
@@ -657,7 +665,7 @@ class CrawlJob:
                         "visited"
                     ).read_manifest(visited_v)["location"]
                     found = ExactSeenSet.empty(self.spark)
-                    self._visited = self.spark.createDataFrame([], VISITED_SCHEMA)
+                    self._visited = local_frame(self.spark, [], VISITED_SCHEMA)
                 else:
                     # per-superstep DELTAS: O(batch) write cost, flat in the
                     # total crawled state (VERDICT round-1 scale fix)
@@ -667,7 +675,8 @@ class CrawlJob:
                         metrics=self.metrics.as_dict(), mode="delta",
                     )
                     self.catalog.table("frontier_claims").commit(
-                        self.spark.createDataFrame(
+                        local_frame(
+                            self.spark,
                             [(r["url_hash"], r["seq"], claim_counter) for r in all_rows],
                             CLAIMS_SCHEMA,
                         ),
@@ -769,7 +778,7 @@ class CrawlJob:
         self._visited = (
             visited_tail
             if visited_tail is not None
-            else self.spark.createDataFrame([], VISITED_SCHEMA)
+            else local_frame(self.spark, [], VISITED_SCHEMA)
         )
         self._visited_count = (
             0 if visited_tail is None and visited_base is None else None
@@ -809,7 +818,7 @@ class CrawlJob:
         tail = (
             self.spark.read.parquet(*tail_locs)
             if tail_locs
-            else self.spark.createDataFrame([], schema)
+            else local_frame(self.spark, [], schema)
         )
         return base_loc, tail
 
@@ -1001,29 +1010,37 @@ class CrawlJob:
             "serve_ok", "_attempt_errors", "hop_hashes",
             "final_status", "final_missing",
         )
-        planned, self._domain_state = politeness.plan_schedule(
-            plan_input,
-            self._domain_state,
+        plan_args = dict(
             delay=cfg.delay,
             variance=cfg.variance,
             seed=cfg.seed,
+            domain_delays=self.robots_delays,
+        )
+        planned, _ = politeness.plan_schedule(
+            plan_input,
+            self._domain_state,
             # crawl batches are driver-bounded (<= batch_size): the
             # hot-group pre-agg job would cost more than the straggler
             # it prevents, and disabling it keeps the float summation
             # order byte-identical to the sequential oracle
             hot_group_rows=None,
-            domain_delays=self.robots_delays,
+            **plan_args,
         )
-        # truncate the domain-state lineage EVERY superstep: its plan
-        # chains a mapInPandas + join + groupBy per step, and Catalyst
-        # re-optimizes every consumer of the chain — measured as
-        # single-core driver minutes once the chain got deep. Lazy
-        # checkpoint = no extra job; blocks materialize at next use.
-        self._domain_state = self._domain_state.localCheckpoint(eager=False)
-        # pin the planned misses once (<= batch_size rows): the
-        # hop-bucket probe, the fused metrics aggregate and the visited
-        # delta all read it
+        # pin the planned misses once (<= batch_size rows): the domain-state
+        # roll, the hop-bucket probe, the fused metrics aggregate and the
+        # visited delta all read it, and the politeness window must run
+        # once for all of them
         planned = planned.localCheckpoint()
+        # truncate the domain-state lineage EVERY superstep: its plan
+        # chains a join + groupBy per step, and Catalyst re-optimizes every
+        # consumer of the chain — measured as single-core driver minutes
+        # once the chain got deep. Under AQE even a lazy checkpoint runs
+        # the plan's shuffle stages when it builds its RDD, which is why
+        # the state rolls from the pinned `planned`: the stage it runs is
+        # the per-domain max over <= batch_size rows, not the plan again.
+        self._domain_state = politeness.roll_domain_state(
+            planned, self._domain_state, **plan_args
+        ).localCheckpoint(eager=False)
         # redirect hops that land on a FRESH, VALID cache entry end the
         # nested get() chain with a cache read: the visit reports frame
         # (0, 0) and threaded_get counts it as a cache hit
@@ -1131,7 +1148,7 @@ class CrawlJob:
             # tracks "provably empty" (0) vs "maybe non-empty" (None)
             self._visited_count = None
         else:
-            visited_delta = self.spark.createDataFrame([], VISITED_SCHEMA)
+            visited_delta = local_frame(self.spark, [], VISITED_SCHEMA)
         # stashed for the snapshot stage: the per-superstep visited DELTA
         self._last_visited_delta = visited_delta
         return resolved, int(stats["n_ok"]), int(stats["n_err"]), n_cache
@@ -1272,6 +1289,11 @@ class CrawlJob:
         ).withColumn("depth", F.col("page_depth") + 1)
         if cfg.honor_page_directives:
             links = links.drop("_pg_nofollow", "_a_nofollow")
+        # pin the link set once (skinny rows: no page payload), before the
+        # robots gate and the claim joins fork it — unpinned, every branch
+        # and every claim action re-ran the store join, the extraction and
+        # the canonicalize UDF over the same links
+        links = links.localCheckpoint()
         if self.robots is not None:
             allowed_links = robots_gate(
                 links.select("link", F.col("link_domain").alias("domain")).distinct(),
@@ -1296,12 +1318,10 @@ class CrawlJob:
         cfg = self.cfg
         # drop links already found globally (they don't mark, count, or queue)
         if self._found_base_loc is not None:
-            # pin the link set once (the fixpoint below re-reads it and the
-            # bucket collection needs a pass anyway), then prune the
-            # on-disk seen base to the buckets the links actually touch —
-            # the anti-join's right side is O(touched buckets + tail)
-            # instead of the whole seen corpus
-            links = links.localCheckpoint()
+            # prune the on-disk seen base to the buckets the (pinned, see
+            # _extract_links) links actually touch — the anti-join's right
+            # side is O(touched buckets + tail) instead of the whole seen
+            # corpus
             bvals = [
                 r["b"]
                 for r in links.select(
