@@ -142,24 +142,12 @@ def _build_pipeline(spark, n: int, timings: dict | None = None):
         F.lit(0).alias("depth"),
     )
     exact = ExactSeenSet(seen_rows)
-    # Dedup strategy is SIZE- and CONTEXT-adaptive (operators/seen.py
-    # docstring carries the measured table). The round-5 probes ran the
-    # full broadcast/merge/shuffle_hash matrix at this shape (n/5 = 12.8M
-    # seen keys, 64M candidates): in ISOLATION broadcast's driver-side
-    # hashed-relation build is a ~10 s serial term (join-component 4->16
-    # efficiency 0.28 vs sort-merge's 0.66), but in the FUSED pipeline
-    # broadcast deletes the anti-join's exchange entirely — the join runs
-    # map-side inside the canonicalize stage — while merge inserts a full
-    # 64M-row exchange + sort of the candidate side (measured fused
-    # 16-core: 161 s broadcast vs 275 s merge, stage_scaling_r5.jsonl).
-    # The ~10 s serial term is <6% of the fused pipeline, so "broadcast"
-    # is the right pin HERE; "merge" wins only when the stage stands
-    # alone or the seen side outgrows the driver (strategy table in
-    # seen.py). Small per-superstep crawl batches are also "broadcast"
-    # (sub-second build). The Bloom prefilter + cogroup probe belong to
-    # the >256 MB-state regime (10^10 URLs) where neither broadcast nor a
-    # full candidate shuffle is affordable; that machinery is exercised
-    # by tests/test_seen.py and the crawl loop.
+    # Exact seen anti-join with the seen side broadcast: the join runs
+    # map-side inside the canonicalize stage, with no exchange. Measured
+    # fused at 64M rows / 16 cores: 161 s broadcast vs 275 s sort-merge
+    # (BENCH/stage_scaling_r5.jsonl); the driver-side hashed-relation
+    # build is a serial term of <6% of the pipeline. BloomSeenSet is a
+    # shim over ExactSeenSet; perfbench/fused.py makes the same calls.
     bloom = BloomSeenSet.empty(
         spark,
         num_partitions=max(spark.sparkContext.defaultParallelism, 8),

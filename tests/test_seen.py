@@ -1,59 +1,9 @@
-"""Seen-set semantics: exact anti-join oracle vs partitioned Bloom vs
-cuckoo (including deletes). Parity target: adt.HashDict membership
-(adt.py:30-74), Queue.clear deletes (pdict.py:481-497)."""
+"""Seen-set semantics: the exact anti-join on the 64-bit url hash.
+Parity target: adt.HashDict membership (adt.py:30-74)."""
 
-import numpy as np
 import pytest
 
 from webscraping_spark.operators import seen as S
-
-
-class TestNumpyKernels:
-    def test_bloom_no_false_negatives(self):
-        rng = np.random.default_rng(42)
-        inserted = rng.integers(-(2**62), 2**62, size=5000, dtype=np.int64)
-        m, k = S.bloom_params(5000, 1e-4)
-        filt = S.bloom_build(inserted, m, k)
-        assert S.bloom_contains(filt, inserted, k).all()
-
-    def test_bloom_fp_rate_within_bound(self):
-        rng = np.random.default_rng(7)
-        inserted = rng.integers(-(2**62), 2**62, size=5000, dtype=np.int64)
-        probes = rng.integers(-(2**62), 2**62, size=20000, dtype=np.int64)
-        m, k = S.bloom_params(5000, 1e-4)
-        filt = S.bloom_build(inserted, m, k)
-        fp = S.bloom_contains(filt, probes, k).mean()
-        assert fp < 1e-2  # sized for 1e-4; generous margin
-
-    def test_bloom_incremental_merge(self):
-        m, k = S.bloom_params(100, 1e-3)
-        a = np.arange(50, dtype=np.int64)
-        b = np.arange(50, 100, dtype=np.int64)
-        merged = S.bloom_build(b, m, k, base=S.bloom_build(a, m, k))
-        assert S.bloom_contains(merged, np.arange(100, dtype=np.int64), k).all()
-
-    def test_cuckoo_insert_contains_delete(self):
-        rng = np.random.default_rng(3)
-        keys = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-        table = S.cuckoo_insert(S.cuckoo_new(4000), keys)
-        assert S.cuckoo_contains(table, keys).all()
-        removed, kept = keys[:500], keys[500:]
-        table = S.cuckoo_delete(table, removed)
-        assert S.cuckoo_contains(table, kept).all()  # no false negatives on kept
-        assert S.cuckoo_contains(table, removed).mean() < 0.05  # mostly gone
-
-
-@pytest.fixture()
-def hashes_df(spark):
-    return spark.createDataFrame(
-        [(int(h),) for h in range(1000)], "url_hash long"
-    ).withColumn("depth", (F_col_mod()))
-
-
-def F_col_mod():
-    from pyspark.sql import functions as F
-
-    return F.pmod(F.col("url_hash"), F.lit(3)).cast("int")
 
 
 class TestSparkSeenSets:
@@ -78,163 +28,33 @@ class TestSparkSeenSets:
         exact = exact.add(spark.createDataFrame([(1, 2)], "url_hash long, depth int"))
         assert exact.df.filter(F.col("url_hash") == 1).first()["depth"] == 2
 
-    def test_bloom_set_roundtrip(self, spark):
-        from pyspark.sql import functions as F
-
-        bloom = S.BloomSeenSet.empty(spark, num_partitions=8, expected_items_per_partition=1000)
-        seen_rows = spark.range(0, 500).select(F.col("id").alias("url_hash"))
-        bloom = bloom.add(seen_rows)
-        cands = spark.range(0, 1000).select(F.col("id").alias("url_hash"))
-        flagged = bloom.might_contain(cands).collect()
-        by_hash = {r["url_hash"]: r["might_be_seen"] for r in flagged}
-        assert all(by_hash[h] for h in range(500))  # no false negatives
-        fp = sum(by_hash[h] for h in range(500, 1000)) / 500
-        assert fp < 0.05
-
-    def test_bloom_prefilter_equals_exact(self, spark):
-        from pyspark.sql import functions as F
-
-        exact = S.ExactSeenSet.empty(spark).add(
-            spark.range(0, 300).select(F.col("id").alias("url_hash"), F.lit(0).alias("depth"))
-        )
-        bloom = S.BloomSeenSet.empty(spark, num_partitions=4, expected_items_per_partition=1000).add(
-            spark.range(0, 300).select(F.col("id").alias("url_hash"))
-        )
-        cands = spark.range(0, 600).select(F.col("id").alias("url_hash"))
-        via_prefilter = sorted(
-            r["url_hash"]
-            for r in bloom.filter_unseen_prefilter(
-                cands, exact, seen_join="bloom"
-            ).collect()
-        )
-        via_exact = sorted(r["url_hash"] for r in exact.filter_unseen(cands).collect())
-        assert via_prefilter == via_exact
-
     def test_bloom_prefilter_broadcast_skips_probe(self, spark):
-        """seen_join='broadcast' must produce the same rows as the probe
-        path AND compile to a pure-JVM broadcast anti-join: no
-        ArrowEvalPython (the pandas Bloom probe), no shuffle exchange."""
+        """The BloomSeenSet shim's seen_join='broadcast' returns the exact
+        anti-join's rows and compiles to a pure-JVM broadcast anti-join: no
+        ArrowEvalPython, no shuffle exchange of the candidates."""
         from pyspark.sql import functions as F
 
-        exact = S.ExactSeenSet.empty(spark).add(
+        # built without add(): its min-depth aggregate would put its own
+        # hash exchange under the broadcast
+        exact = S.ExactSeenSet(
             spark.range(0, 300).select(F.col("id").alias("url_hash"), F.lit(0).alias("depth"))
         )
-        bloom = S.BloomSeenSet.empty(spark, num_partitions=4, expected_items_per_partition=1000).add(
-            spark.range(0, 300).select(F.col("id").alias("url_hash"))
-        )
+        shim = S.BloomSeenSet.empty(spark, num_partitions=4, expected_items_per_partition=1000)
         cands = spark.range(0, 600).select(F.col("id").alias("url_hash"))
-        out = bloom.filter_unseen_prefilter(cands, exact, seen_join="broadcast")
+        out = shim.filter_unseen_prefilter(cands, exact, seen_join="broadcast")
         got = sorted(r["url_hash"] for r in out.collect())
+        assert got == sorted(r["url_hash"] for r in exact.filter_unseen(cands).collect())
         assert got == list(range(300, 600))
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert "Exchange hashpartitioning" not in plan
 
-    def test_cuckoo_set_delete_path(self, spark):
-        from pyspark.sql import functions as F
-
-        ck = S.CuckooSeenSet.empty(spark, num_partitions=4, capacity_per_partition=2000)
-        ck = ck.add(spark.range(0, 400).select(F.col("id").alias("url_hash")))
-        ck = ck.delete(spark.range(0, 100).select(F.col("id").alias("url_hash")))
-        flagged = {
-            r["url_hash"]: r["might_be_seen"]
-            for r in ck.might_contain(
-                spark.range(0, 400).select(F.col("id").alias("url_hash"))
-            ).collect()
-        }
-        assert all(flagged[h] for h in range(100, 400))  # kept keys present
-        assert sum(flagged[h] for h in range(100)) < 10  # deleted keys gone
-
-
-class TestAntiJoinStrategies:
-    def test_merge_leg_parity_and_plan(self, spark):
-        """seen_join='merge' (the STANDALONE multi-million-key shape —
-        round-5 probe: broadcast's driver-side build is a serial ~10s
-        Amdahl term at 12.8M keys; fused pipelines still prefer
-        broadcast, see seen.py docstring) must produce identical rows
-        via a SortMergeJoin."""
-        from pyspark.sql import functions as F
-
-        exact = S.ExactSeenSet.empty(spark).add(
-            spark.range(0, 300).select(
-                F.col("id").alias("url_hash"), F.lit(0).alias("depth")
+    @pytest.mark.parametrize("seen_join", ["merge", "bloom", None])
+    def test_shim_rejects_other_strategies(self, spark, seen_join):
+        exact = S.ExactSeenSet.empty(spark)
+        cands = spark.range(0, 10).withColumnRenamed("id", "url_hash")
+        with pytest.raises(ValueError, match="broadcast"):
+            S.BloomSeenSet.empty(spark).filter_unseen_prefilter(
+                cands, exact, seen_join=seen_join
             )
-        )
-        bloom = S.BloomSeenSet.empty(
-            spark, num_partitions=4, expected_items_per_partition=1000
-        )
-        cands = spark.range(0, 600).select(F.col("id").alias("url_hash"))
-        out = bloom.filter_unseen_prefilter(cands, exact, seen_join="merge")
-        got = sorted(r["url_hash"] for r in out.collect())
-        assert got == list(range(300, 600))
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan  # merge leg skips the probe too
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
-
-    def test_bloom_path_probe_key_distributes_cleared_rows(self, spark):
-        """The bloom path's probe key must be the struct(cleared, hash)
-        form: cleared rows never equi-match the seen side but still carry
-        their own hash (NULL keys would all land in one shuffle
-        partition — the r3 pathology)."""
-        from pyspark.sql import functions as F
-
-        exact = S.ExactSeenSet.empty(spark).add(
-            spark.range(0, 100).select(
-                F.col("id").alias("url_hash"), F.lit(0).alias("depth")
-            )
-        )
-        bloom = S.BloomSeenSet.empty(
-            spark, num_partitions=4, expected_items_per_partition=1000
-        ).add(spark.range(0, 100).select(F.col("id").alias("url_hash")))
-        cands = spark.range(0, 400).select(F.col("id").alias("url_hash"))
-        out = bloom.filter_unseen_prefilter(cands, exact, seen_join="bloom")
-        assert sorted(r["url_hash"] for r in out.collect()) == list(range(100, 400))
-        # the plan's join key is a struct, not a nullable when()
-        plan = out._jdf.queryExecution().analyzed().toString()
-        assert "_probe_key" in plan and "struct" in plan.lower()
-
-    def test_auto_strategy_is_size_driven(self, spark):
-        """seen_join=None picks the strategy from the seen side's size
-        STATISTIC (no job): broadcast anti-join for a small seen set,
-        NOT-broadcast for a seen side whose stats say 10^8-scale — the
-        round-5 'scale the default config -> driver OOM' hazard becomes a
-        plan switch (VERDICT r5 Next #4). Uses only lazy plans: the big
-        side is a spark.range projection whose size estimate is
-        8 B x 2e8 without executing anything."""
-        from pyspark.sql import functions as F
-
-        # built WITHOUT add(): the min-depth aggregate resets Catalyst's
-        # size estimate to the unknown sentinel, and auto treats unknown
-        # conservatively (Bloom path). A projection-shaped seen side has
-        # an honest estimate and must auto-broadcast.
-        small_exact = S.ExactSeenSet(
-            spark.range(0, 300).select(
-                F.col("id").alias("url_hash"), F.lit(0).alias("depth")
-            )
-        )
-        bloom = S.BloomSeenSet.empty(
-            spark, num_partitions=4, expected_items_per_partition=1000
-        ).add(spark.range(0, 300).select(F.col("id").alias("url_hash")))
-        cands = spark.range(0, 600).select(F.col("id").alias("url_hash"))
-
-        # small seen side: auto must compile to the pure-JVM broadcast
-        # anti-join (no pandas Bloom probe, no candidate-side exchange)
-        out_small = bloom.filter_unseen_prefilter(cands, small_exact)
-        got = sorted(r["url_hash"] for r in out_small.collect())
-        assert got == list(range(300, 600))
-        plan_small = out_small._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan_small
-        assert "BroadcastHashJoin" in plan_small and "LeftAnti" in plan_small
-
-        # 10^8-scale stats: auto must NOT broadcast the seen side — the
-        # Bloom-prefilter probe path is planned instead (plan-only check;
-        # nothing is executed)
-        big_exact = S.ExactSeenSet(
-            spark.range(0, 200_000_000).select(
-                F.col("id").alias("url_hash"), F.lit(0).alias("depth")
-            )
-        )
-        assert bloom._auto_seen_join(big_exact) is None
-        out_big = bloom.filter_unseen_prefilter(cands, big_exact)
-        plan_big = out_big._jdf.queryExecution().sparkPlan().toString()
-        assert "_probe_key" in plan_big  # the prefilter anti-join shape

@@ -5,15 +5,15 @@ Not a port: the reference library (read-only at /root/reference) defines
 WHAT is computed — URL canonicalization, seen-set membership, frontier
 ordering, per-domain politeness, robots gating, page-cache semantics,
 text/link extraction — while this package re-expresses all of it as
-idiomatic Spark: DataFrame joins for cache/dedup, window functions for
-politeness scheduling, partitioned Bloom/cuckoo filters for the seen set,
-and vectorized pandas/Arrow UDFs (never per-row Python) for the string
+idiomatic Spark: DataFrame joins for cache/dedup and for the exact
+hash-keyed seen set, window functions for politeness scheduling, and
+vectorized pandas/Arrow UDFs (never per-row Python) for the string
 kernels Spark lacks built-ins for.
 
 Layout:
   functions/  pure-Python + pandas normalization kernel and its pandas-UDF
               bindings (urlnorm, textkernel, extract, geo, xpath, hashing)
-  operators/  Spark operators: seen set (exact/bloom/cuckoo), frontier
+  operators/  Spark operators: seen set (exact anti-join), frontier
               push/pull, politeness planner, robots gate, dedup family,
               similarity search, text stats, multimodal plumbing
   sources/    deterministic fixture synthesis, image codecs, the

@@ -1,4 +1,4 @@
-"""Spark operators: URL-seen set (exact / partitioned Bloom / cuckoo),
+"""Spark operators: URL-seen set (exact anti-join on the url hash),
 frontier push/pull, politeness planner, robots gate, page-cache join, and
 the training-data operator family (dedup, similarity, text stats,
 multimodal plumbing)."""

@@ -13,8 +13,7 @@ Plan shapes, sized for 100 TB:
     expression — zero shuffle, fuses into the scan.
   - fitting (:func:`fit_logratios`) is one posexplode + map-side-combinable
     groupBy per corpus; the result is ``n_buckets`` rows (a few thousand),
-    collected to the driver — bounded by B, not by corpus size, the same
-    bounded-collect contract as the Bloom-filter build.
+    collected to the driver — bounded by B, not by corpus size.
   - scoring (:func:`importance_weights`) embeds the fitted ratios as ONE
     literal array and folds each doc's bucket list against it with
     ``element_at`` — zero shuffle, zero Python, whole-stage codegen; the

@@ -8,7 +8,7 @@ One superstep = one reference "drain a batch from the deque":
   plan (window lag-cumsum per domain, seeded jitter) ──► link extraction
   (JVM regex posexplode, canonicalize pandas UDF) ──► validity gate
   (media/http/domain/regex/robots — download.py:1010-1026) ──► seen filter
-  (anti-join, optional Bloom pre-filter) ──► claim resolution + per-page
+  (exact anti-join on the url hash) ──► claim resolution + per-page
   link cap (fixpoint, exact sequential parity) ──► found-mark + frontier
   push ──► metrics + snapshot commit.
 
@@ -35,10 +35,7 @@ batch is materialized, and the planned misses and the extracted links are
 pinned where their consumers fork. The page payload is not pinned, so the
 store join runs twice: once under the plan's narrow projection, once
 under extraction. Frontier and seen state are checkpointed per superstep
-through the snapshot catalog, which is what `resume` reads back. Hot
-domains are salted at the fetch-stage repartition
-(operators/politeness.salted_repartition); politeness itself is planned on
-the unsalted key.
+through the snapshot catalog, which is what `resume` reads back.
 """
 
 from __future__ import annotations
@@ -59,7 +56,7 @@ from webscraping_spark.operators.frontier import (
     Frontier,
 )
 from webscraping_spark.operators.robots import robots_gate
-from webscraping_spark.operators.seen import BloomSeenSet, ExactSeenSet
+from webscraping_spark.operators.seen import ExactSeenSet
 from webscraping_spark.session import local_frame
 from webscraping_spark.sources.snapshots import SnapshotCatalog
 
@@ -126,7 +123,6 @@ class CrawlConfig:
     delay: float = 5.0  # politeness (download.py:130)
     variance: float = 0.5
     seed: int = 42
-    use_bloom_prefilter: bool = False
     # False = threaded_get deque semantics (queue never dedups; `found`
     # does — a link back to a seed re-queues it, download.py:834/1041).
     # True = DataCrawler semantics (visited gate, download.py:1117).
@@ -139,8 +135,6 @@ class CrawlConfig:
     # same as checkpoint_interval. Larger values stretch the delta chain a
     # resume must union — lineage truncation is NOT affected
     compact_interval: int | None = None
-    bloom_partitions: int = 32
-    salt_hot_threshold: int = 10_000
     # hash-bucket count for the on-disk seen/visited state (pmod(url_hash,
     # B) hive partitions). With a snapshot catalog attached, each
     # compaction writes the state bucketed and per-superstep probes read
@@ -474,11 +468,6 @@ class CrawlJob:
         if reset_state or not hasattr(self, "_frontier"):
             self._frontier = Frontier.empty(self.spark)
             self._found = ExactSeenSet.empty(self.spark)
-            self._bloom = (
-                BloomSeenSet.empty(self.spark, cfg.bloom_partitions)
-                if cfg.use_bloom_prefilter
-                else None
-            )
             # visited-page cache state (PersistentDict twin): a DataFrame,
             # not a driver set — O(corpus) stays on the cluster. `ok` and
             # `status404` drive the reference's empty-cache semantics on
@@ -498,7 +487,6 @@ class CrawlJob:
             self._committed_seq = 0  # high-water mark of snapshot-committed rows
         frontier = self._frontier.push(self.seed_candidates(seeds))
         found = self._found
-        bloom = self._bloom
         visit_idx = self._visit_idx
         batch_size = cfg.batch_size  # unbounded DFS guarantees 1 (__post_init__)
         # queue size is maintained arithmetically (Queue.size parity,
@@ -574,14 +562,12 @@ class CrawlJob:
             extracted = self._extract_links(resolved)
             # _claim_and_cap pins its result internally; `claimed` is a
             # cheap projection over that pinned frame
-            claimed = self._claim_and_cap(extracted, found, bloom)
+            claimed = self._claim_and_cap(extracted, found)
 
             found = found.add(
                 claimed.select(F.col("link_hash").alias("url_hash"), "depth"),
                 assume_new=True,  # claims were anti-joined against `found`
             )
-            if bloom is not None:
-                bloom = bloom.add(claimed.select(F.col("link_hash").alias("url_hash")))
 
             queued = claimed.filter(F.col("is_valid")).select(
                 F.col("link").alias("url"),
@@ -609,10 +595,6 @@ class CrawlJob:
                 )
                 found = ExactSeenSet(found.df.localCheckpoint())
                 self._visited = self._visited.localCheckpoint()
-                if bloom is not None:
-                    bloom = BloomSeenSet(
-                        bloom.state.localCheckpoint(), bloom.P, bloom.m, bloom.k
-                    )
 
             # ---- metrics + snapshot ---------------------------------------
             self.metrics.num_downloads += n_ok
@@ -699,7 +681,7 @@ class CrawlJob:
                 )
             if self.metrics.queue_size == 0:
                 break
-        self._frontier, self._found, self._bloom = frontier, found, bloom
+        self._frontier, self._found = frontier, found
         self._visit_idx = visit_idx
         self.final_frontier = frontier
         self.final_found = found
@@ -786,7 +768,6 @@ class CrawlJob:
         ds = catalog.table("domain_state").load(self.spark)
         if ds is not None:
             self._domain_state = ds
-        self._bloom = None
         self._visit_idx = manifest["lineage"]["visit_idx"]
         self._committed_seq = manifest["lineage"]["next_seq"]
         self.last_batch_visits = []
@@ -1310,9 +1291,7 @@ class CrawlJob:
             ).drop("_rb_link")
         return links
 
-    def _claim_and_cap(
-        self, links: DataFrame, found: ExactSeenSet, bloom: BloomSeenSet | None
-    ) -> DataFrame:
+    def _claim_and_cap(self, links: DataFrame, found: ExactSeenSet) -> DataFrame:
         """Resolve first-discovery claims + per-page max_links cap with
         exact sequential parity (fixpoint; see module docstring)."""
         cfg = self.cfg
@@ -1335,12 +1314,9 @@ class CrawlJob:
             )
         else:
             seen_view = found
-        if bloom is not None:
-            fresh = bloom.filter_unseen_prefilter(links, seen_view, on="link_hash")
-        else:
-            fresh = seen_view.filter_unseen(links, on="link_hash")
-        fresh = fresh.withColumn("_occ", F.struct("page_seq", "pos"))
-        occurrences = fresh
+        occurrences = seen_view.filter_unseen(links, on="link_hash").withColumn(
+            "_occ", F.struct("page_seq", "pos")
+        )
 
         for _ in range(8):  # fixpoint: usually terminates in 1 iteration
             wins = occurrences.groupBy("link_hash").agg(F.min("_occ").alias("_win"))
