@@ -1,5 +1,5 @@
 """Benchmark: frontier URLs/sec through the full crawl pipeline
-(canonicalize -> hash -> dedup -> robots -> politeness plan -> salted
+(canonicalize -> hash -> dedup -> robots -> politeness plan ->
 fetch-join -> link extraction), per BASELINE.md.
 
 Prints ONE JSON line:
@@ -174,13 +174,8 @@ def _build_pipeline(spark, n: int, timings: dict | None = None):
     planned, _ = politeness.plan_schedule(
         unseen, state, delay=5.0, variance=0.5, seed=42, hot_group_rows=None
     )
-    # NO salted_repartition here: the fetch join below hash-partitions on
-    # `url` (uniformly distributed), which already spreads hot domains
-    # across tasks — a prior (domain, salt) exchange would be immediately
-    # re-shuffled away (profiled: a dead 3 GB exchange at 64M rows). The
-    # streaming crawl loop, whose fetch stage IS a per-partition map,
-    # is where salted_repartition earns its exchange.
-    salted = planned
+    # the fetch join below hash-partitions on `url` (uniformly
+    # distributed), which already spreads hot domains across tasks
 
     # fetch stage: join against a page store (1 page per 4 candidate links)
     store = (
@@ -204,7 +199,7 @@ def _build_pipeline(spark, n: int, timings: dict | None = None):
     # broadcast, and Catalyst's size estimate for the synthesized store
     # (projected from range()) undercounts the html payload badly enough to
     # pick a broadcast that dies building at 16M-row sweep sizes
-    fetched = salted.join(store.hint("shuffle_hash"), "url", "left")
+    fetched = planned.join(store.hint("shuffle_hash"), "url", "left")
     # scheduled_offset MUST reach the sink: it is the politeness plan's
     # output (the real loop fetches at these offsets and reports the
     # makespan). Dropping it here lets Catalyst dead-code-eliminate the
@@ -332,7 +327,9 @@ def main():
             F.lit("http://w.com/a/b.html"), F.concat(F.lit("../x"), F.col("id").cast("string"))
         ).alias("u")
     )
-    warm.count()
+    # aggregate over `u`: a bare count() lets column pruning drop the UDF,
+    # and then no Python worker starts
+    warm.agg(F.max("u")).collect()
 
     # q_* BEFORE the 16M pipeline: in round 3 they ran after it and read
     # uniformly ~2x slower than round 2 at identical inputs (VERDICT r3

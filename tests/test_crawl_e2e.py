@@ -415,6 +415,91 @@ class TestSeenSetParity:
         assert not any("q.html" in u for u in got)
 
 
+class SqlNodes:
+    """The physical nodes of the SQL executions that start after
+    construction, with their metrics, read from the session's SQL status
+    store (kept with the UI off too)."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.store = spark._jsparkSession.sharedState().statusStore()
+        self.since = max(self._execution_ids(), default=-1)
+
+    def _execution_ids(self) -> list[int]:
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = self.store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    def nodes(self, name: str) -> list[dict]:
+        """One {metric name: value} dict per ``name`` node executed."""
+        out = []
+        for eid in self._execution_ids():
+            if eid <= self.since:
+                continue
+            values, it = {}, self.store.executionMetrics(eid).iterator()
+            while it.hasNext():
+                kv = it.next()
+                values[kv._1()] = kv._2()
+            nodes = self.store.planGraph(eid).allNodes()
+            for i in range(nodes.size()):
+                node = nodes.apply(i)
+                if node.name() != name:
+                    continue
+                metrics = node.metrics()
+                out.append({
+                    m.name(): values.get(m.accumulatorId(), "0")
+                    for m in (metrics.apply(k) for k in range(metrics.size()))
+                })
+        return out
+
+    def python_rows(self) -> int:
+        """Rows that crossed into Python through ArrowEvalPython."""
+        return sum(
+            int(n["number of output rows"].replace(",", ""))
+            for n in self.nodes("ArrowEvalPython")
+        )
+
+
+class TestPythonBoundary:
+    """Only the links no JVM tier resolves cross into Python, and a crawl
+    with none plans no Python node at all."""
+
+    def test_clean_crawl_plans_no_python(self, spark):
+        # absolute links only and no meta refresh: every link is tier 0
+        pages = synth.site_tree(branching=3, depth=1)
+        sql = SqlNodes(spark)
+        exp, job = run_both(spark, pages, [pages[0]["url"]], max_depth=None)
+        assert job.visit_urls() == exp.visit_order
+        assert sql.nodes("ArrowEvalPython") == []
+
+    def test_dirty_crawl_python_rows_are_the_dirty_tail(self, spark):
+        import re
+
+        from pyspark.sql import functions as F
+
+        from webscraping_spark.functions import udfs
+
+        pages = synth.site_dirty_links()
+        sql = SqlNodes(spark)
+        exp, job = run_both(spark, pages, [pages[0]["url"]], max_depth=None)
+        python_rows = sql.python_rows()
+        got = job.visit_urls()
+        assert got == exp.visit_order
+        # the dirty tail: hrefs on the visited pages that the JVM tiers
+        # flag for the kernel (here the mailto: and the percent escape)
+        hrefs = [
+            (p["url"], h)
+            for p in pages if p["url"] in got
+            for h in re.findall(r"(?i)<a[^>]+href=[\"'](.*?)[\"']", p["html"])
+        ]
+        flagged = udfs.canonicalize_jvm(
+            spark.createDataFrame(hrefs, "base string, raw string"),
+            "base", "raw", "link", "_kernel",
+        ).filter(F.col("_kernel")).count()
+        assert 0 < flagged < len(hrefs)
+        assert python_rows == flagged
+
+
 def job_frontier_urls(job):
     # the final frontier DF isn't retained on the job; reconstruct from the
     # visit log + queued rows is overkill — expose via last pushed frontier
@@ -643,13 +728,26 @@ class TestSuperstepJobBudget:
     """Each stage of a superstep runs once: the claimed batch, the planned
     misses and the extracted links are pinned where their consumers fork.
     A change that re-forks a stage (a second action re-running it) shows
-    up as more Spark jobs for the same superstep."""
+    up as more Spark jobs for the same superstep; a change that widens a
+    stage past what the batch needs shows up as more tasks."""
 
     # measured on this fixture when the pins were placed (local[4]; the
     # unpinned superstep ran 55)
     MAX_JOBS = 42
+    # completed tasks, as a function of the core count: measured on this
+    # fixture at 54 / 64 / 80 tasks on local[2] / [4] / [8] once the
+    # politeness window and the stages over the planned misses were sized
+    # to the batch's domains (one here, so those stages run one task each
+    # instead of cores x SORT_WAVES; the superstep ran 215 at local[4]
+    # before)
+    @staticmethod
+    def max_tasks(cores: int) -> int:
+        return 44 + 5 * cores
 
-    def test_checkpointed_superstep_job_count(self, spark, tmp_path):
+    @pytest.fixture(scope="class")
+    def superstep(self, spark, tmp_path_factory):
+        """(jobs, completed tasks) of one checkpointed superstep on
+        site_dirty_links with robots, and the job's visits."""
         from webscraping_spark.operators.robots import ROBOTS_SCHEMA
 
         pages = synth.site_dirty_links()
@@ -661,7 +759,7 @@ class TestSuperstepJobBudget:
             synth.pages_df(spark, pages),
             CrawlConfig(max_depth=None),
             robots=robots_df,
-            checkpoint_dir=str(tmp_path / "ckpt"),
+            checkpoint_dir=str(tmp_path_factory.mktemp("budget") / "ckpt"),
         )
         sc = spark.sparkContext
         group = "superstep-job-budget"
@@ -671,6 +769,21 @@ class TestSuperstepJobBudget:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert job.last_batch_visits == [pages[0]["url"]]
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        tasks = sum(
+            info.numCompletedTasks
+            for info in (tracker.getStageInfo(s) for s in stages)
+            if info is not None
+        )
+        return len(jobs), tasks, job.last_batch_visits, pages[0]["url"]
+
+    def test_checkpointed_superstep_job_count(self, superstep):
+        n_jobs, _, visits, seed = superstep
+        assert visits == [seed]
         assert 0 < n_jobs <= self.MAX_JOBS
+
+    def test_checkpointed_superstep_task_count(self, spark, superstep):
+        _, n_tasks, _, _ = superstep
+        assert 0 < n_tasks <= self.max_tasks(spark.sparkContext.defaultParallelism)

@@ -119,13 +119,21 @@ class TestPolitenessPlan:
         plan2 = pruned._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan2
 
-    def test_salting_splits_hot_domain(self, spark):
-        rows = [(f"http://hot.com/{i}", "hot.com", 0, i) for i in range(200)]
+    def test_width_argument_sets_partitions_not_offsets(self, spark):
+        """``num_partitions`` sizes the window stage; the schedule itself
+        is the same at any width."""
+        rows = [(f"http://d{i % 3}.com/{i}", f"d{i % 3}.com", 0, i) for i in range(30)]
         state = spark.createDataFrame([], P.DOMAIN_STATE_SCHEMA)
-        planned, _ = P.plan_schedule(make_batch(spark, rows), state, DELAY, VARIANCE)
-        salted = P.salted_repartition(planned, hot_threshold=50, salt_rows_per_bucket=25)
-        n_salts = salted.select("salt").distinct().count()
-        assert n_salts >= 4  # 200 rows / 25 per bucket
+        batch = make_batch(spark, rows)
+        default, _ = P.plan_schedule(batch, state, DELAY, VARIANCE, hot_group_rows=None)
+        narrow, _ = P.plan_schedule(
+            batch, state, DELAY, VARIANCE, hot_group_rows=None, num_partitions=3
+        )
+        assert narrow.rdd.getNumPartitions() == 3
+        offsets = lambda df: sorted(  # noqa: E731
+            (r["url"], r["scheduled_offset"]) for r in df.collect()
+        )
+        assert offsets(narrow) == offsets(default)
 
 
 class TestRobotsGate:

@@ -103,6 +103,24 @@ class TestSnapshotResume:
         # FULL order (restored claims + its own)
         assert j2.visit_urls() == expected_visits
 
+    def test_queue_size_matches_count_fresh_continued_restored(self, spark, tmp_path):
+        """run() takes a fresh queue's size from the seed push instead of
+        counting it, and counts continued or restored state once; on every
+        path metrics.queue_size equals the frontier's real queued count."""
+        pages = synth.site_tree(branching=3, depth=2)
+        ckpt = str(tmp_path / "ckpt_q")
+        cfg = CrawlConfig(max_depth=None, batch_size=2)
+        job = CrawlJob(spark, synth.pages_df(spark, pages), cfg, checkpoint_dir=ckpt)
+        # a repeated seed: the seed push dedups it
+        job.run([pages[0]["url"], pages[1]["url"], pages[0]["url"]], max_supersteps=1)
+        assert job.metrics.queue_size == job._frontier.queued_count() > 0
+        job.run([pages[2]["url"]], max_supersteps=1)
+        assert job.metrics.queue_size == job._frontier.queued_count() > 0
+        restored = CrawlJob(spark, synth.pages_df(spark, pages), cfg)
+        restored.restore(ckpt)
+        restored.run([], max_supersteps=1)
+        assert restored.metrics.queue_size == restored._frontier.queued_count() > 0
+
     def test_resume_preserves_cache_classification(self, spark, tmp_path):
         """Round-1 ADVICE: restore() used to reset the visited set, so a
         post-resume revisit was mis-counted as a download instead of a

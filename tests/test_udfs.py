@@ -140,7 +140,56 @@ def test_clean_link_predicate_is_conservative(spark):
 import pytest
 
 
-@pytest.mark.parametrize("compact", [False, True])
+def canon(df, mode):
+    """``canon`` = canonicalize(base, link) through canonicalize_split
+    (``mode`` = its ``compact`` flag), or with ``mode="pinned"`` through the
+    crawl's form: canonicalize_jvm pinned, then the kernel over the flagged
+    rows only."""
+    if mode != "pinned":
+        return udfs.canonicalize_split(df, "base", "link", "canon", compact=mode)
+    flagged = udfs.canonicalize_jvm(df, "base", "link", "canon", "_k").localCheckpoint()
+    return udfs.canonicalize_flagged(flagged, "base", "link", "canon", "_k").drop("_k")
+
+
+@pytest.mark.parametrize("compact", [False, True, "pinned"])
+def test_empty_and_fragment_tier_parity(spark, compact):
+    """Tier E: empty and fragment-only hrefs resolve to a tier-0-clean base
+    in the JVM; against any other base they still reach the kernel."""
+    import itertools
+
+    clean = [
+        "http://e.com",
+        "http://e.com/",
+        "http://e.com/dir/page.html",
+        "https://e.com/a/b/?q=1",
+        "http://e.com/p?a=1&b=2",
+    ]
+    dirty = [
+        "http://e.com/a/../b.html",  # '/..' segment
+        "http://e.com/..x/y",  # the kernel strips a leading '/..'
+        "http://e.com/%7Eu/",  # percent escape
+        "http://e.com/p?",  # bare trailing '?'
+        "http://e.com/ü/",  # non-ASCII
+        "ftp://e.com/x",  # not http(s)
+        "/relative/base.html",
+        "http://e.com/p?a=1&amp;b",  # entity
+    ]
+    links = ["", "#", "#x", "#a#b", "#%20"]
+    cases = list(itertools.product(clean + dirty, links))
+    df = spark.createDataFrame(cases, "base string, link string")
+    out = canon(df, compact).collect()
+    assert len(out) == len(cases)
+    for r in out:
+        expected = canonicalize_url(r["base"], r["link"])
+        assert r["canon"] == expected, f"({r['base']!r}, {r['link']!r}): {r['canon']!r} != {expected!r}"
+    routed = {
+        (r["base"], r["link"]): r["_k"]
+        for r in udfs.canonicalize_jvm(df, "base", "link", "canon", "_k").collect()
+    }
+    assert routed == {(b, l): b in dirty for b, l in cases}
+
+
+@pytest.mark.parametrize("compact", [False, True, "pinned"])
 def test_canonicalize_tiered_parity_random(spark, compact):
     """Randomized parity sweep over link shapes that straddle the JVM
     fast-path tier boundaries (tier routing must never change the value)."""
@@ -213,14 +262,14 @@ def test_canonicalize_tiered_parity_random(spark, compact):
     ]
     cases = list(itertools.product(bases, links))
     df = spark.createDataFrame(cases, "base string, link string")
-    out = udfs.canonicalize_split(df, "base", "link", "canon", compact=compact).collect()
+    out = canon(df, compact).collect()
     assert len(out) == len(cases)
     for r in out:
         expected = canonicalize_url(r["base"], r["link"])
         assert r["canon"] == expected, f"({r['base']!r}, {r['link']!r}): {r['canon']!r} != {expected!r}"
 
 
-@pytest.mark.parametrize("compact", [False, True])
+@pytest.mark.parametrize("compact", [False, True, "pinned"])
 def test_canonicalize_fuzz_parity(spark, compact):
     """Seeded random link shapes: segment soup with dot segments, empty
     segments, escapes, entities, queries — split output must equal the
@@ -253,7 +302,7 @@ def test_canonicalize_fuzz_parity(spark, compact):
             link = "//" + link
         cases.append((rng.choice(bases), link))
     df = spark.createDataFrame(cases, "base string, link string")
-    out = udfs.canonicalize_split(df, "base", "link", "canon", compact=compact).collect()
+    out = canon(df, compact).collect()
     assert len(out) == len(cases)
     for r in out:
         expected = canonicalize_url(r["base"], r["link"])

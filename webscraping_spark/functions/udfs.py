@@ -226,41 +226,10 @@ def resolve_relative_col(base: Column, rel_path: Column, rel_query: Column) -> C
     return F.concat(base_root, p, rel_query)
 
 
-def canonicalize_split(df, base_col: str, link_col: str, out_col: str, compact: bool = False):
-    """Tiered canonicalization.
-
-    Tiers:
-      tier 0  clean absolute links: provable normalize fixpoints — project
-              as-is (pure JVM).
-      tier R  relative links against a clean base: after JVM-side fragment
-              strip and ``&amp;`` decode, an ASCII link with no percent
-              escape / entity / scheme / authority resolves as RFC 3986
-              merge + dot-segment removal — pure JVM regex
-              (``resolve_relative_col``), including ``../`` chains up to
-              ``_MAX_JVM_DOTDOT`` deep. Links with ``//`` empty segments
-              are EXCLUDED (urljoin collapses them — kernel's job), as are
-              bases whose own dir path has ``//`` or dot segments.
-      tier 2  everything else: the exact pandas-UDF kernel.
-
-    Spark's ExtractPythonUDFs rule evaluates a pandas UDF for every row
-    even under a when() branch — and even NULL-gated inputs pay the full
-    Arrow round-trip machinery per row (measured ~2.4 us/row/core on 4M
-    all-null rows). So the split is physical, but TWO-way, not three: one
-    JVM branch computes tiers 0 and R as a when() ladder (predicates
-    evaluated once), and only the ``~tier0 & ~tierR`` filter reaches the
-    pandas kernel. Upstream is evaluated twice; in the crawl loop that
-    upstream is a bounded batch, and in the bench it is a cheap synthesized
-    scan — both beat shipping every row through Arrow.
-
-    Real frontiers are dominated by tiers 0/R (absolute, sibling-relative
-    and ``../`` hrefs), so the Python kernel only sees the genuinely dirty
-    tail (percent escapes, entities, non-ASCII, scheme-relative forms).
-    Parity with ``canonicalize_url`` is asserted by tests on every tier
-    boundary.
-    """
-    base = F.col(base_col)
-    link = F.col(link_col)
-
+def _canonicalize_tiers(base: Column, link: Column) -> tuple[Column, Column]:
+    """(jvm_side, jvm_out): whether the JVM tiers of canonicalize_split
+    resolve ``link`` against ``base``, and their result (meaningful only
+    where jvm_side holds). See canonicalize_split for the tiers."""
     tier0 = clean_link_predicate(link)
 
     # JVM-decodable form of the link: fragment strip + &amp; -> & — both
@@ -270,6 +239,10 @@ def canonicalize_split(df, base_col: str, link_col: str, out_col: str, compact: 
     decoded = F.replace(
         F.substring_index(link, "#", 1), F.lit("&amp;"), F.lit("&")
     )
+    # tier E: an empty or fragment-only href names the page itself —
+    # urljoin(base, "") returns base verbatim, and a tier-0-clean base has
+    # no leading '/..' for the kernel's strip loop to remove
+    tierE = (decoded == "") & clean_link_predicate(base)
     # path/query split without regex (substring_index returns the whole
     # string when '?' is absent; substr past end returns "")
     rel_path = F.substring_index(decoded, "?", 1)
@@ -355,9 +328,10 @@ def canonicalize_split(df, base_col: str, link_col: str, out_col: str, compact: 
     )
 
     # NULL links route to the kernel (which maps them to "")
-    jvm_side = F.coalesce(tier0 | tierR, F.lit(False))
+    jvm_side = F.coalesce(tier0 | tierE | tierR, F.lit(False))
     jvm_out = (
         F.when(tier0, link)
+        .when(tierE, base)
         .when(
             ~has_dotseg,
             # no dot segments: the RFC merge is a plain concat — onto
@@ -372,13 +346,60 @@ def canonicalize_split(df, base_col: str, link_col: str, out_col: str, compact: 
         )
         .otherwise(resolve_relative_col(base, rel_path, rel_query))
     )
+    return jvm_side, jvm_out
+
+
+def canonicalize_split(df, base_col: str, link_col: str, out_col: str, compact: bool = False):
+    """Tiered canonicalization.
+
+    Tiers:
+      tier 0  clean absolute links: provable normalize fixpoints — project
+              as-is (pure JVM).
+      tier E  empty or fragment-only links ('', '#', '#x') against a
+              tier-0-clean base: the base itself (pure JVM).
+      tier R  relative links against a clean base: after JVM-side fragment
+              strip and ``&amp;`` decode, an ASCII link with no percent
+              escape / entity / scheme / authority resolves as RFC 3986
+              merge + dot-segment removal — pure JVM regex
+              (``resolve_relative_col``), including ``../`` chains up to
+              ``_MAX_JVM_DOTDOT`` deep. Links with ``//`` empty segments
+              are EXCLUDED (urljoin collapses them — kernel's job), as are
+              bases whose own dir path has ``//`` or dot segments.
+      tier 2  everything else: the exact pandas-UDF kernel.
+
+    Spark's ExtractPythonUDFs rule evaluates a pandas UDF for every row
+    even under a when() branch — and even NULL-gated inputs pay the full
+    Arrow round-trip machinery per row (measured ~2.4 us/row/core on 4M
+    all-null rows). So the split is physical, but TWO-way, not three: one
+    JVM branch computes tiers 0, E and R as a when() ladder (predicates
+    evaluated once), and only the rows no JVM tier takes reach the pandas
+    kernel. Upstream is evaluated twice; in the bench it is a cheap
+    synthesized scan, which beats shipping every row through Arrow.
+
+    ``compact=True`` is the single-pass form for callers whose upstream
+    is expensive to re-evaluate and is not pinned: the fused benchmark
+    pipeline (``bench.py``, ``perfbench/fused.py``), the crawl's opt-in
+    ``<base href>`` resolution and ``directives``' canonical-link
+    resolution. It sends EVERY row across the Python boundary. The crawl's link extraction and meta-refresh chase
+    use neither form: they pin ``canonicalize_jvm``'s output, count its
+    kernel flag in the pin's own job, and run ``canonicalize_flagged``
+    only when there are flagged rows.
+
+    Real frontiers are dominated by tiers 0/R (absolute, sibling-relative
+    and ``../`` hrefs), so the Python kernel only sees the genuinely dirty
+    tail (percent escapes, entities, non-ASCII, scheme-relative forms).
+    Parity with ``canonicalize_url`` is asserted by tests on every tier
+    boundary.
+    """
+    base = F.col(base_col)
+    link = F.col(link_col)
+    jvm_side, jvm_out = _canonicalize_tiers(base, link)
     if compact:
-        # SINGLE-pass form for bounded batches whose upstream is expensive
-        # to re-evaluate (the crawl superstep's join+explode chain): the
-        # UDF runs over every row but its inputs are NULL-gated, so JVM
-        # rows cost only the Arrow transfer (~2.4 us/row/core) and the
-        # kernel short-circuits them (canonicalize_url_series). Preserves
-        # per-partition row order; evaluates upstream ONCE.
+        # SINGLE-pass form: the UDF runs over every row but its inputs are
+        # NULL-gated, so JVM rows cost only the Arrow transfer (~2.4
+        # us/row/core) and the kernel short-circuits them
+        # (canonicalize_url_series). Preserves per-partition row order;
+        # evaluates upstream ONCE.
         udf_out = canonicalize_url_udf(
             F.when(~jvm_side, base), F.when(~jvm_side, link)
         )
@@ -390,6 +411,36 @@ def canonicalize_split(df, base_col: str, link_col: str, out_col: str, compact: 
         out_col, canonicalize_url_udf(base, link)
     )
     return jvm_df.unionByName(py_df)
+
+
+def canonicalize_jvm(df, base_col: str, link_col: str, out_col: str, kernel_col: str):
+    """The JVM tiers of canonicalize_split alone, for a caller that pins
+    the result: ``out_col`` is the resolved link, and ``kernel_col`` is
+    true on the rows only the kernel can resolve (their ``out_col`` is
+    NULL). NULL links stay NULL and are not flagged. No Python node is
+    planned; ``canonicalize_flagged`` resolves the flagged rows."""
+    link = F.col(link_col)
+    jvm_side, jvm_out = _canonicalize_tiers(F.col(base_col), link)
+    return df.withColumn(kernel_col, link.isNotNull() & ~jvm_side).withColumn(
+        out_col, F.when(jvm_side, jvm_out)
+    )
+
+
+def canonicalize_flagged(
+    df, base_col: str, link_col: str, out_col: str, kernel_col: str, derive=None
+):
+    """Resolve the rows ``canonicalize_jvm`` flagged: ``out_col`` is the
+    exact pandas-UDF kernel's result on the ``kernel_col`` rows, which
+    ``derive`` (if given) then re-processes the way the caller processed
+    the JVM-resolved rows; the other rows pass as they are. Both branches
+    read ``df``, so the caller pins it first."""
+    flagged = F.col(kernel_col)
+    resolved = df.filter(flagged).withColumn(
+        out_col, canonicalize_url_udf(F.col(base_col), F.col(link_col))
+    )
+    if derive is not None:
+        resolved = derive(resolved)
+    return df.filter(~flagged).unionByName(resolved)
 
 
 def url_hash_col(url: Column) -> Column:

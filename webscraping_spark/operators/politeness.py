@@ -20,12 +20,9 @@ Engine re-expression (no wall-clock sleeping, no global state):
     (domain, proxy, next_allowed_offset), merged per superstep — the
     distributed analog of ``Download._domains``.
   - **Hot-domain skew**: the per-domain window is the skew point (AQE
-    cannot split a window partition). The planner computes per-domain
-    counts first; domains above ``hot_threshold`` still plan politeness on
-    the unsalted key (correctness), but the subsequent fetch-stage
-    repartition uses ``(domain, salt = pmod(url_hash, S_domain))`` so no
-    single task owns a mega-domain (plan-on-unsalted, execute-on-salted —
-    SURVEY.md §4 item 1).
+    cannot split a window partition); ``plan_schedule``'s
+    ``hot_group_rows`` cuts a hot group into order-aligned buckets that
+    scan in parallel.
 """
 
 from __future__ import annotations
@@ -109,6 +106,7 @@ def plan_schedule(
     proxy_col: str | None = None,
     hot_group_rows: int | None = 50_000,
     domain_delays: DataFrame | None = None,
+    num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Assign ``scheduled_offset`` (seconds from superstep start) to each
     row of the batch and roll ``domain_state`` forward.
@@ -141,6 +139,14 @@ def plan_schedule(
     NOTE: splitting changes float-summation ASSOCIATION for hot groups
     (bucket subtotals then local prefixes); drift is ~1 ulp per bucket
     and tested against the unbucketed scan with np.isclose.
+
+    ``num_partitions`` is the window stage's width. None (the default)
+    sizes it to the session: ``SORT_WAVES`` sort waves per core, or 16 on
+    a driver heap under 2 GB. A caller that knows its batch can pass
+    less: the crawl loop passes ``min(cores x SORT_WAVES, distinct
+    domains in the batch)``, since a domain never spans partitions and
+    partitions past the domain count only add empty tasks to the window
+    and to every stage that reads the planned rows.
     """
     proxy = F.col(proxy_col) if proxy_col else F.lit("")
     b, eff_delay = _with_delay_floor(
@@ -249,7 +255,9 @@ def plan_schedule(
             mult = 16
     except Exception:
         pass  # non-JVM backends (connect): keep the default width
-    n_parts = batch.sparkSession.sparkContext.defaultParallelism * mult
+    n_parts = num_partitions or (
+        batch.sparkSession.sparkContext.defaultParallelism * mult
+    )
 
     # Grouped prefix sum as a JVM WINDOW running sum, not a pandas scan:
     # the former mapInPandas kernel shipped the WHOLE batch through an
@@ -313,59 +321,6 @@ def plan_schedule(
         proxy_col=proxy_col,
         domain_delays=domain_delays,
     )
-
-
-def domain_counts(batch: DataFrame) -> DataFrame:
-    """Per-domain row counts — the skew signal for salting decisions."""
-    return batch.groupBy("domain").agg(F.count("*").alias("n_urls"))
-
-
-def salted_repartition(
-    batch: DataFrame,
-    hot_threshold: int = 10_000,
-    salt_rows_per_bucket: int = 2_000,
-    num_partitions: int | None = None,
-    salt_buckets: int | None = 32,
-) -> DataFrame:
-    """Repartition a planned batch for the fetch stage, salting hot domains.
-
-    Politeness is already encoded in ``scheduled_offset`` (plan-on-unsalted),
-    so splitting a domain across tasks cannot violate spacing; salting only
-    fixes the straggler.
-
-    Two modes:
-      - ``salt_buckets=S`` (default): count-free — every row gets
-        ``salt = pmod(url_hash, S)``; a hot domain spreads over up to S
-        tasks and small domains are unharmed (their S sub-buckets hash to
-        partitions together or apart, either is fine for fetch execution).
-        Single pass, no extra aggregation job.
-      - ``salt_buckets=None``: adaptive — measure per-domain counts and
-        size salts per hot domain (an extra aggregation pass over the
-        batch; worth it only when S must be tuned per domain).
-    """
-    n = num_partitions or batch.sparkSession.sparkContext.defaultParallelism
-    if salt_buckets is not None:
-        salted = batch.withColumn(
-            "salt", F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int")
-        )
-        return salted.repartition(n, "domain", "salt")
-    counts = domain_counts(batch)
-    hot = counts.filter(F.col("n_urls") > hot_threshold).withColumn(
-        "n_salts",
-        F.ceil(F.col("n_urls") / F.lit(salt_rows_per_bucket)).cast("int"),
-    )
-    salted = (
-        batch.join(F.broadcast(hot.select("domain", "n_salts")), "domain", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("n_salts").isNotNull(),
-                F.pmod(F.col("url_hash"), F.col("n_salts")).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("n_salts")
-    )
-    return salted.repartition(n, "domain", "salt")
 
 
 def batch_wallclock(planned: DataFrame) -> DataFrame:

@@ -6,7 +6,7 @@ One superstep = one reference "drain a batch from the deque":
   pull ordered batch ──► resolve against page store (the fetch stage:
   left join on url; 301/meta-refresh content pre-resolved) ──► politeness
   plan (window lag-cumsum per domain, seeded jitter) ──► link extraction
-  (JVM regex posexplode, canonicalize pandas UDF) ──► validity gate
+  (JVM regex posexplode, tiered canonicalize) ──► validity gate
   (media/http/domain/regex/robots — download.py:1010-1026) ──► seen filter
   (exact anti-join on the url hash) ──► claim resolution + per-page
   link cap (fixpoint, exact sequential parity) ──► found-mark + frontier
@@ -24,18 +24,24 @@ cannot change under them) plus one interior row per superstep — exact
 parity at any batch_size. Unbounded DFS still requires batch_size=1 and
 CrawlConfig rejects anything else outright.
 
-Scale notes: every stage is a DataFrame op. Python runs in two row
-kernels — the canonicalize pandas UDF over the dirty tail of extracted
-links, and over meta-refresh targets while the page store resolves — and
-on the driver in the claim fixpoint's loop (bounded, usually 1
-iteration). Registrable domains and ``seq`` stamping are JVM expressions,
-and driver-local rows reach the JVM as Arrow tables, not Python RDDs.
-Each stage several actions read runs once per superstep: the claimed
-batch is materialized, and the planned misses and the extracted links are
-pinned where their consumers fork. The page payload is not pinned, so the
-store join runs twice: once under the plan's narrow projection, once
-under extraction. Frontier and seen state are checkpointed per superstep
-through the snapshot catalog, which is what `resume` reads back.
+Scale notes: every stage is a DataFrame op. Python runs in one row
+kernel, the canonicalize pandas UDF, and only over the rows the JVM tiers
+cannot resolve: the pin of the extracted links (and of each meta-refresh
+chase level while the page store resolves) counts those rows in its own
+job through ``observe()``, and the kernel is planned only when the count
+is above zero. A superstep whose links are all JVM-tier, over a store
+without refresh tags, starts no Python worker. On the driver, Python runs
+the claim fixpoint's loop (bounded, usually 1 iteration). Registrable
+domains and ``seq`` stamping are JVM expressions, and driver-local rows
+reach the JVM as Arrow tables, not Python RDDs. Each stage several
+actions read runs once per superstep: the claimed batch is materialized,
+and the planned misses and the extracted links are pinned where their
+consumers fork. The politeness window, and every stage over the planned
+misses, is as wide as the batch has domains (capped at the session's
+default width). The page payload is not pinned, so the store join runs
+twice: once under the plan's narrow projection, once under extraction.
+Frontier and seen state are checkpointed per superstep through the
+snapshot catalog, which is what `resume` reads back.
 """
 
 from __future__ import annotations
@@ -43,7 +49,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -67,6 +73,31 @@ VISITED_SCHEMA = "url_hash long, fetched_at double, ok boolean, status404 boolea
 # the URL-seen set (link-found marks); restore's empty-tail path derives
 # its schema from here so it can never diverge from the delta writes
 from webscraping_spark.operators.seen import EXACT_SEEN_SCHEMA as SEEN_SCHEMA
+
+
+def _pin_canonical(
+    df: DataFrame, base_col: str, link_col: str, out_col: str, derive=None, **conds: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """``df`` with ``out_col`` = canonicalize(``base_col``, ``link_col``)
+    (and ``derive``'s columns over it, if given), pinned eagerly. The
+    pin's own job counts, through ``observe()``, the rows the JVM tiers
+    leave to the kernel and the rows matching each of ``conds``; the
+    kernel runs, and the frame is pinned again, only when the first count
+    is above zero. Returns (pinned frame, counts of ``conds``)."""
+    df = udfs.canonicalize_jvm(df, base_col, link_col, out_col, "_kernel")
+    if derive is not None:
+        df = derive(df)
+    obs = Observation()
+    conds = {"_kernel": F.col("_kernel"), **conds}
+    df = df.observe(
+        obs, *[F.count(F.when(c, 1)).alias(k) for k, c in conds.items()]
+    ).localCheckpoint()
+    counts = {k: int(v) for k, v in obs.get.items()}
+    if counts.pop("_kernel"):
+        df = udfs.canonicalize_flagged(
+            df, base_col, link_col, out_col, "_kernel", derive
+        ).localCheckpoint()
+    return df.drop("_kernel"), counts
 
 
 @dataclass
@@ -266,8 +297,9 @@ class CrawlJob:
         301/302: urllib follows transparently (content = target's), the
         engine bakes that in. Meta-refresh (download.py:254-268, 619-624):
         chased iteratively to ``num_redirects`` levels — each level is one
-        store self-join, exactly the nested ``get()`` recursion unrolled.
-        Emitted chain columns:
+        store self-join, exactly the nested ``get()`` recursion unrolled —
+        and only while some page still has a live target. The store is
+        pinned eagerly at construction. Emitted chain columns:
 
           serve_html    final content (empty when the chain dead-ends on a
                         missing or permanently-erroring target — the
@@ -355,15 +387,23 @@ class CrawlJob:
             )
             .drop("html1")
         )
+        # one chase level per iteration, each run only while some row
+        # still has a live target: a store without refresh tags costs one
+        # pin and no join. `_target` is the canonical target of a live
+        # row, NULL on stopped or tag-less rows.
         for _ in range(max(0, cfg.num_redirects)):
-            raw_target = F.regexp_extract(F.col("serve_html"), meta_pat, 1)
-            resolved = resolved.withColumn(
-                "_target",
-                F.when(
-                    ~F.col("_stopped") & (raw_target != ""),
-                    udfs.canonicalize_url_udf(F.col("_cur_url"), raw_target),
+            raw = F.regexp_extract(F.col("serve_html"), meta_pat, 1)
+            resolved, n = _pin_canonical(
+                resolved.withColumn(
+                    "_raw_target", F.when(~F.col("_stopped") & (raw != ""), raw)
                 ),
+                "_cur_url", "_raw_target", "_target",
+                live=F.col("_raw_target").isNotNull(),
             )
+            resolved = resolved.drop("_raw_target")
+            if not n["live"]:
+                resolved = resolved.drop("_target")
+                break
             followed = F.col("_target").isNotNull()
             resolved = resolved.join(
                 hop_tbl, F.col("_target") == F.col("_m_url"), "left"
@@ -413,7 +453,11 @@ class CrawlJob:
                 .withColumn("_stopped", F.col("_stopped") | ~hop_ok)
                 .drop("_target", "_m_url", "_m_html", "_m_status", "_m_sa")
             )
-        resolved = (
+        else:
+            # every allowed level was chased (or none was allowed): pin the
+            # last level's join
+            resolved = resolved.localCheckpoint()
+        return (
             resolved.withColumn(
                 "serve_final_url",
                 F.when(F.col("_cur_url") != F.col("url"), F.col("_cur_url")).otherwise(
@@ -423,7 +467,6 @@ class CrawlJob:
             .withColumn("hop_hashes", F.transform(F.col("hop_urls"), lambda u: F.xxhash64(u)))
             .drop("_cur_url", "_stopped")
         )
-        return resolved.localCheckpoint(eager=False)
 
     # ------------------------------------------------------------------- run
 
@@ -465,7 +508,8 @@ class CrawlJob:
         crawler's incremental seeding (async.py:100-106)."""
         cfg = self.cfg
         n_seeds = seeds.count() if isinstance(seeds, DataFrame) else len(seeds)
-        if reset_state or not hasattr(self, "_frontier"):
+        fresh = reset_state or not hasattr(self, "_frontier")
+        if fresh:
             self._frontier = Frontier.empty(self.spark)
             self._found = ExactSeenSet.empty(self.spark)
             # visited-page cache state (PersistentDict twin): a DataFrame,
@@ -490,8 +534,10 @@ class CrawlJob:
         visit_idx = self._visit_idx
         batch_size = cfg.batch_size  # unbounded DFS guarantees 1 (__post_init__)
         # queue size is maintained arithmetically (Queue.size parity,
-        # pdict.py:437-450): one count at entry, then +pushed -pulled
-        queue_size = frontier.queued_count()
+        # pdict.py:437-450): known at entry, then +pushed -pulled. A fresh
+        # queue holds exactly the seed push's rows; continued or restored
+        # state is counted once
+        queue_size = frontier.next_seq if fresh else frontier.queued_count()
 
         for step in range(max_supersteps):
             if cfg.max_urls is not None and visit_idx >= cfg.max_urls:
@@ -1005,6 +1051,13 @@ class CrawlJob:
             # it prevents, and disabling it keeps the float summation
             # order byte-identical to the sequential oracle
             hot_group_rows=None,
+            # one window partition per domain at most: the planned pin,
+            # the state roll, the metrics aggregate, the visited delta and
+            # the domain_state commit all run at this width
+            num_partitions=min(
+                self.spark.sparkContext.defaultParallelism * politeness.SORT_WAVES,
+                max(1, len({r["domain"] for r in all_rows})),
+            ),
             **plan_args,
         )
         # pin the planned misses once (<= batch_size rows): the domain-state
@@ -1220,16 +1273,36 @@ class CrawlJob:
                     "pos", "raw"
                 ),
             )
-        # tiered canonicalization: clean/simple links stay JVM-side, only
-        # the dirty tail pays the Arrow round-trip (parity-tested split —
-        # the round-1 hot path sent EVERY link through the pandas UDF);
-        # registrable domain likewise via the codegen twin of the UDF
-        # compact (single-pass, NULL-gated UDF) form: the filter-split
-        # variant would re-evaluate this superstep's join+explode chain
-        # once per branch
-        links = udfs.canonicalize_split(
-            links, "serve_base", "raw", "link", compact=True
+        # tiered canonicalization, pinned once (skinny rows, no page
+        # payload) before the robots gate and the claim joins fork the
+        # links: only the links no JVM tier resolves reach the kernel, and
+        # a batch without such links plans no Python node
+        links, _ = _pin_canonical(
+            links, "serve_base", "raw", "link", derive=self._link_columns
         )
+        if cfg.honor_page_directives:
+            links = links.drop("_pg_nofollow", "_a_nofollow")
+        if self.robots is not None:
+            allowed_links = robots_gate(
+                links.select("link", F.col("link_domain").alias("domain")).distinct(),
+                self.robots,
+                self.cfg.user_agent,
+                url_col="link",
+            ).select(F.col("link").alias("_rb_link"))
+            links = links.join(
+                F.broadcast(allowed_links),
+                links["link"] == F.col("_rb_link"),
+                "left",
+            ).withColumn(
+                "is_valid_pre", F.col("is_valid_pre") & F.col("_rb_link").isNotNull()
+            ).drop("_rb_link")
+        return links
+
+    def _link_columns(self, links: DataFrame) -> DataFrame:
+        """The columns derived from a canonical ``link``: its tracking-
+        parameter strip (when configured), registrable domain, validity
+        gate, hash and depth. Applied again, it replaces them."""
+        cfg = self.cfg
         if cfg.strip_tracking:
             from webscraping_spark.operators.urlfilter import (
                 strip_tracking_params_col,
@@ -1265,31 +1338,11 @@ class CrawlJob:
             valid = valid & url_quality_keep_col(F.col("link"))
         if cfg.honor_page_directives:
             valid = valid & ~F.col("_pg_nofollow") & ~F.col("_a_nofollow")
-        links = links.withColumn("is_valid_pre", valid).withColumn(
-            "link_hash", F.xxhash64("link")
-        ).withColumn("depth", F.col("page_depth") + 1)
-        if cfg.honor_page_directives:
-            links = links.drop("_pg_nofollow", "_a_nofollow")
-        # pin the link set once (skinny rows: no page payload), before the
-        # robots gate and the claim joins fork it — unpinned, every branch
-        # and every claim action re-ran the store join, the extraction and
-        # the canonicalize UDF over the same links
-        links = links.localCheckpoint()
-        if self.robots is not None:
-            allowed_links = robots_gate(
-                links.select("link", F.col("link_domain").alias("domain")).distinct(),
-                self.robots,
-                self.cfg.user_agent,
-                url_col="link",
-            ).select(F.col("link").alias("_rb_link"))
-            links = links.join(
-                F.broadcast(allowed_links),
-                links["link"] == F.col("_rb_link"),
-                "left",
-            ).withColumn(
-                "is_valid_pre", F.col("is_valid_pre") & F.col("_rb_link").isNotNull()
-            ).drop("_rb_link")
-        return links
+        return (
+            links.withColumn("is_valid_pre", valid)
+            .withColumn("link_hash", F.xxhash64("link"))
+            .withColumn("depth", F.col("page_depth") + 1)
+        )
 
     def _claim_and_cap(self, links: DataFrame, found: ExactSeenSet) -> DataFrame:
         """Resolve first-discovery claims + per-page max_links cap with
