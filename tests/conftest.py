@@ -3,6 +3,11 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small + fast for unit tests
+# session.py's default heap is 24g, more than a 15 GB host has: the JVM
+# then grows until the kernel kills it mid-suite and every later test
+# fails on a refused py4j connection. 4g is the heap perfbench/host.py
+# pins for the same host; it leaves room for the Python workers.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 
 @pytest.fixture(scope="session")
