@@ -4,6 +4,8 @@ writes) and post-resume cache classification."""
 
 import os
 
+import pytest
+
 from webscraping_spark.plans.crawl import CrawlConfig, CrawlJob
 from webscraping_spark.plans.oracle import OracleConfig, SequentialOracle
 from webscraping_spark.sources import synth
@@ -265,8 +267,14 @@ class TestBucketedStateProbes:
         job.run([pages[0]["url"]])
         return pages, ckpt, job
 
-    def test_probe_input_bounded_and_pruned(self, spark, tmp_path):
-        pages, ckpt, job = self._run_chain(spark, tmp_path, n=24)
+    @pytest.fixture(scope="class")
+    def chain24(self, spark, tmp_path_factory):
+        """The 24-page chain crawl, run once for the tests below, which
+        only read its state."""
+        return self._run_chain(spark, tmp_path_factory.mktemp("chain24"), n=24)
+
+    def test_probe_input_bounded_and_pruned(self, chain24):
+        pages, ckpt, job = chain24
         # correctness first: the bucketed crawl visits the chain in order
         assert job.visit_urls() == [p["url"] for p in pages]
         # a bucketed base exists and the in-memory tail is bounded by
@@ -287,11 +295,11 @@ class TestBucketedStateProbes:
         assert "PartitionFilters" in plan
         assert "bucket" in plan
 
-    def test_probe_input_flat_as_state_grows(self, spark, tmp_path):
+    def test_probe_input_flat_as_state_grows(self, spark, tmp_path, chain24):
         """The scale signal: crawling 3x more pages must NOT grow the
         single-key probe view proportionally (O(bucket) vs O(corpus))."""
         _, _, small = self._run_chain(spark, tmp_path / "a", n=8)
-        _, _, big = self._run_chain(spark, tmp_path / "b", n=24)
+        _, _, big = chain24
         k_small = int(small._visited_full().select("url_hash").first()["url_hash"])
         k_big = int(big._visited_full().select("url_hash").first()["url_hash"])
         v_small = small._visited_view([k_small]).count()
